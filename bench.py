@@ -129,7 +129,7 @@ def main() -> None:
             timings[name] = second
         _isolate(spark, baseline_tables)
     # Third pass for the ALS variance watchlist (r10 verdict item 5):
-    # this host runs MLlib on the pure-Java BLAS fallback (the
+    # this host runs MLlib on netlib's Java VectorBLAS (the
     # dev.ludovic.netlib JNI bindings are absent), which makes ALS
     # timings JIT-warmup-sensitive — min-of-2 left als_replay_hash
     # drifting 1.9-4.0s across rounds with no code change. One more
@@ -151,30 +151,18 @@ def main() -> None:
 
     # Record which BLAS MLlib actually loaded, so round-over-round
     # diffs read ALS timing drift as environment variance, not a
-    # regression (the JVM warns 'Failed to load ...JNIBLAS' on every
-    # run here; native bindings are not installable in this container)
-    try:
-        spark._jvm.dev.ludovic.netlib.blas.JNIBLAS.getInstance()
-        blas_note = {"native_blas": True}
-    except Exception:
-        blas_note = {
-            "native_blas": False,
-            "note": (
-                "pure-Java BLAS fallback: ADJUDICATED IMPOSSIBLE in "
-                "this image, not merely unconfigured. The only BLAS "
-                "shared object present is numpy's bundled ILP64 "
-                "OpenBLAS (libopenblas64_p*.so) whose symbols are "
-                "suffixed (dgemm_64_); netlib JNIBLAS binds the LP64 "
-                "names (dgemm_), so pointing "
-                "dev.ludovic.netlib.blas.nativeLibPath at it "
-                "hard-fails, no system libblas.so.3 exists "
-                "(ldconfig -p: zero BLAS/LAPACK entries), and "
-                "pip/apt installs are banned. ALS timings therefore "
-                "stay JIT-warmup-sensitive — hence the min-of-3 "
-                "watchlist pass and the calibration-normalized "
-                "ratios below."
-            ),
-        }
+    # regression. BLAS.getInstance() returns the implementation
+    # netlib picked (JNIBLAS when native BLAS loads, else the Java
+    # VectorBLAS/F2jBLAS) without throwing; JNIBLAS.getInstance()
+    # throws when native BLAS is absent.
+    blas_cls = (
+        spark._jvm.dev.ludovic.netlib.blas.BLAS.getInstance()
+        .getClass().getName()
+    )
+    blas_note = {
+        "class": blas_cls,
+        "native_blas": blas_cls.endswith(".JNIBLAS"),
+    }
 
     # Reference four-phase instrumentation (SVDMovieLensSparkJava.java:166-181:
     # construct / load history / calc features / process test), like-for-like:

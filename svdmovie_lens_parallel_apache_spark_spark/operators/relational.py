@@ -30,18 +30,38 @@ def spread_small(df: DataFrame) -> DataFrame:
     once to light every core."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    # exchange-carrying plans are left alone WITHOUT touching .rdd:
+    # shuffle-carrying plans are left alone WITHOUT touching .rdd:
     # the shuffle already sets downstream parallelism, and accessing
-    # .rdd on an adaptive plan with exchanges finalizes the AQE plan —
+    # .rdd on an adaptive plan with shuffles finalizes the AQE plan —
     # eagerly executing its shuffle stages just to read a partition
-    # count, work that is NOT reused by the later action (round-14,
-    # ADVICE item). sparkPlan() is the non-adaptive physical plan — a
-    # pure planning artifact, never executed by inspecting it.
-    if "Exchange" in df._jdf.queryExecution().sparkPlan().toString():
+    # count, work that is NOT reused by the later action. sparkPlan()
+    # is the non-adaptive physical plan — a pure planning artifact,
+    # never executed by inspecting it; the shuffles it shows are
+    # explicit repartitions and those inside cached frames' plans.
+    if _has_shuffle(df._jdf.queryExecution().sparkPlan()):
         return df
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def _has_shuffle(node) -> bool:
+    """Whether a JVM physical plan holds a shuffle exchange node,
+    cached relations' plans included. Matches node classes, so a
+    ``BroadcastExchange`` or an 'Exchange' string literal in the plan
+    text does not count."""
+    name = node.getClass().getSimpleName()
+    if name == "ShuffleExchangeExec":
+        return True
+    subs = [node.children(), node.innerChildren()]
+    kids = [s.apply(i) for s in subs for i in range(s.size())]
+    # nodes that hold their sub-plan outside children()/innerChildren()
+    # (a reused exchange's original sits elsewhere in the same plan)
+    if name == "AdaptiveSparkPlanExec":
+        kids.append(node.executedPlan())
+    elif name.endswith("QueryStageExec"):  # shuffle/broadcast/result/...
+        kids.append(node.plan())
+    return any(_has_shuffle(k) for k in kids)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:

@@ -30,6 +30,17 @@ _DEFAULTS = {
     # size; this only stops byte-cheap/CPU-expensive partitions from
     # being merged below it.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # Spark 4 defaults this to false, which plans every .persist()ed
+    # frame with AQE's final-stage coalescing OFF so the cache keeps
+    # its hash partitioning. The engine persists small shuffle outputs
+    # (an MV refresh's grouped delta and upserts, merge_upsert's
+    # updates): with the flag off every stage reading them ran
+    # shuffle.partitions tasks over a few KB, and the staged write
+    # fanned a 15-row view out into one shard per partition. The
+    # price of true is at most one extra exchange where a later query
+    # re-keys a cached frame on its own shuffle key; the exchange
+    # counts in PLAN_FINGERPRINTS.json show no query pays it.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",

@@ -476,18 +476,16 @@ def refresh_aggregate_view(
             f"table's history; rebuild with force_rebuild=True"
         )
 
-    if _delta_cache is not None and (last, cur) in _delta_cache:
-        delta = _delta_cache[(last, cur)]
-    else:
+    # multi-view refresh: refresh_aggregate_views pins the shared CDC
+    # frame(s) before its pool starts, and owns them. This call only
+    # READS the cache: if the source head moved since then, the range
+    # is a miss and the view reads its own unpinned diff, so no two
+    # threads ever write the dict or displace a persisted frame
+    delta = (_delta_cache or {}).get((last, cur))
+    if delta is None:
         delta = st.read_cdc(
             spark, source, start_version=last, end_version=cur
         )
-        if _delta_cache is not None:
-            # multi-view refresh: pin the raw CDC frame so each view's
-            # fold reuses ONE multiset diff instead of recomputing it;
-            # ownership (unpersist) stays with refresh_aggregate_views
-            delta = delta.persist()
-            _delta_cache[(last, cur)] = delta
     if filter is not None:
         delta = delta.where(filter)
     ins = F.col("_change_type") == "insert"
@@ -751,9 +749,8 @@ def refresh_aggregate_views(
     try:
         if shared:
             # pre-build the shared CDC frame(s) single-threaded: the
-            # refreshes below run concurrently and the cache dict must
-            # not be mutated from two threads (each refresh then only
-            # READS its (last, cur) entry)
+            # refreshes below run concurrently and only READ the cache,
+            # so this is the one place it is written
             cur = st.latest_version(source)
             for w in sorted(shared):
                 if cur is not None and cur > w:

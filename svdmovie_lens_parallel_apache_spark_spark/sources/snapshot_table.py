@@ -2199,7 +2199,8 @@ def _remove_unreferenced(
 
 
 def _footer_stats(
-    table: str, names: list[str], schema, stats_cols: list[str] | None,
+    spark: SparkSession, table: str, names: list[str], schema,
+    stats_cols: list[str] | None,
 ) -> tuple[dict, dict] | None:
     """Per-shard row counts and min/max stats read from the parquet
     FOOTERS on the driver — no Spark job, no re-scan of data just
@@ -2254,14 +2255,11 @@ def _footer_stats(
         # incremented) bound that pyarrow 16 cannot distinguish from
         # an exact one — so if the session's Hadoop conf sets any
         # finite truncation length, refuse the fast path and let the
-        # caller run the exact aggregation instead.
+        # caller run the exact aggregation instead. The session comes
+        # from the caller's frame, not getActiveSession(): that lookup
+        # is thread-local and returns None in pool threads.
         try:
-            from pyspark.sql import SparkSession
-
-            sess = SparkSession.getActiveSession()
-            if sess is None:
-                return None
-            hc = sess.sparkContext._jsc.hadoopConfiguration()
+            hc = spark.sparkContext._jsc.hadoopConfiguration()
             v = hc.get("parquet.statistics.truncate.length")
             if v is not None and int(v) < (1 << 31) - 1:
                 return None
@@ -2518,8 +2516,10 @@ def _stage_publish(
     spark = df.sparkSession
     counts = {n: 0 for n in mine}
     stats: dict[str, dict] = {n: {} for n in mine}
-    footer = _footer_stats(table, mine, df.schema, stats_cols) if mine \
-        else None
+    footer = (
+        _footer_stats(spark, table, mine, df.schema, stats_cols)
+        if mine else None
+    )
     if footer is not None:
         # driver-side footer read replaces the per-commit stats job —
         # bit-identical by the _footer_stats whitelist, else it

@@ -9,7 +9,7 @@ one (pyarrow 16 exposes no is_min/max_value_exact), so the fast path
 must refuse and the commit must fall back to the exact aggregation.
 """
 
-import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,14 +43,14 @@ def test_footer_stats_refused_under_truncation_conf(spark, trunc_conf, tmp_path)
     names = [s["file"] for s in snap["shards"]]
     schema = _docs(spark).schema
     # default conf: fast path proves the bounds and returns them
-    got = st._footer_stats(table, names, schema, ["s"])
+    got = st._footer_stats(spark, table, names, schema, ["s"])
     assert got is not None
     # any finite truncation length -> the fast path must refuse
     trunc_conf.set(TRUNC_KEY, "64")
-    assert st._footer_stats(table, names, schema, ["s"]) is None
+    assert st._footer_stats(spark, table, names, schema, ["s"]) is None
     # non-string stats stay on the fast path (truncation only affects
     # binary/string bounds)
-    assert st._footer_stats(table, names, schema, ["id"]) is not None
+    assert st._footer_stats(spark, table, names, schema, ["id"]) is not None
 
 
 def test_commit_under_truncation_conf_records_exact_stats(
@@ -70,3 +70,37 @@ def test_commit_under_truncation_conf_records_exact_stats(
             his.append(hi)
     exp = _docs(spark).agg(F.min("s"), F.max("s")).collect()[0]
     assert min(los) == exp[0] and max(his) == exp[1]
+
+
+def test_commit_from_pool_thread_keeps_footer_fast_path(
+    spark, tmp_path, monkeypatch
+):
+    """MV refreshes and pruning probes commit from pool threads, where
+    the thread-local active session is unset. The footer read must use
+    the committed frame's own session, so those commits keep the fast
+    path instead of silently paying the stats aggregation job."""
+    got = []
+    real = st._footer_stats
+
+    def recording(*args, **kw):
+        got.append(real(*args, **kw))
+        return got[-1]
+
+    monkeypatch.setattr(st, "_footer_stats", recording)
+    table = str(tmp_path / "t")
+    docs = _docs(spark)
+    errors = []
+
+    def commit():
+        try:
+            st.write_snapshot(docs, table, stats_cols=["s"])
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    t = threading.Thread(target=commit)
+    t.start()
+    t.join()
+    assert not errors, errors
+    assert len(got) == 1 and got[0] is not None
+    counts, _ = got[0]
+    assert sum(counts.values()) == 3

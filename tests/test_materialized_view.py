@@ -518,3 +518,85 @@ def test_multi_view_refresh_shares_one_cdc_read(spark, orders, tmp_path,
     assert len(calls) == 1  # one diff, two folds
     _assert_equiv(spark, src, v1, spec1)
     _assert_equiv(spark, src, v2, spec2)
+
+
+def test_fold_refresh_keeps_small_view_in_few_shards(spark, orders, tmp_path):
+    """A fold refresh rewrites a small view as a small view: the cached
+    delta and upsert frames let AQE coalesce their tiny shuffle outputs,
+    so the copy-on-write merge stages the touched groups into one or two
+    shards instead of one per shuffle partition."""
+    src = str(tmp_path / "src")
+    view = str(tmp_path / "view")
+    spec = dict(
+        group_by=["band"],
+        sums={"sum_price": "CAST(o_totalprice AS DECIMAL(18,6))"},
+        count_col="cnt",
+    )
+    st.write_snapshot(orders.where("o_orderkey % 4 = 0"), src)
+    mv.refresh_aggregate_view(spark, src, view, **spec)
+    for part in (1, 2, 3):
+        st.write_snapshot(
+            orders.where(f"o_orderkey % 4 = {part}"), src, mode="append"
+        )
+        mv.refresh_aggregate_view(spark, src, view, **spec)
+        head = st._load_snapshot(view, st.latest_version(view))
+        assert len(head["shards"]) <= 2, len(head["shards"])
+    _assert_equiv(spark, src, view, spec)
+
+
+def test_multi_view_refresh_when_head_moves_after_prebuild(
+    spark, orders, tmp_path, monkeypatch
+):
+    """The source head moves between refresh_aggregate_views' shared
+    CDC pre-build and the pool threads' own head reads: each thread
+    misses the shared range and must fold its own diff WITHOUT writing
+    the shared cache (two threads would race the same key and the
+    displaced persisted frame would never be unpersisted)."""
+    src = str(tmp_path / "src")
+    v1 = str(tmp_path / "v1")
+    v2 = str(tmp_path / "v2")
+    spec1 = dict(
+        group_by=["band"],
+        sums={"s": "CAST(o_totalprice AS DECIMAL(18,6))"},
+        count_col="cnt",
+    )
+    spec2 = dict(group_by=["o_orderstatus"],
+                 mins={"m": "o_totalprice"}, count_col="cnt")
+    st.write_snapshot(orders.where("o_orderkey % 3 = 0"), src)
+    mv.refresh_aggregate_views(spark, src, {v1: spec1, v2: spec2})
+    st.write_snapshot(
+        orders.where("o_orderkey % 3 = 1"), src, mode="append"
+    )
+
+    real_cdc = mv.st.read_cdc
+    prebuilt = []
+
+    def cdc_then_move_head(spark_, table, **kw):
+        frame = real_cdc(spark_, table, **kw)
+        if not prebuilt:
+            prebuilt.append((kw["start_version"], kw["end_version"]))
+            st.write_snapshot(
+                orders.where("o_orderkey % 3 = 2"), src, mode="append"
+            )
+        return frame
+
+    real_refresh = mv.refresh_aggregate_view
+    seen_keys = []
+
+    def recording(*a, _delta_cache=None, **kw):
+        got = real_refresh(*a, _delta_cache=_delta_cache, **kw)
+        seen_keys.append(set(_delta_cache or {}))
+        return got
+
+    monkeypatch.setattr(mv.st, "read_cdc", cdc_then_move_head)
+    monkeypatch.setattr(mv, "refresh_aggregate_view", recording)
+    jsc = spark.sparkContext._jsc
+    pinned_before = jsc.getPersistentRDDs().size()
+    out = mv.refresh_aggregate_views(spark, src, {v1: spec1, v2: spec2})
+    head = st.latest_version(src)
+    assert prebuilt == [(1, 2)] and head == 3
+    assert out == {v1: head, v2: head}
+    assert seen_keys == [{(1, 2)}, {(1, 2)}]
+    assert jsc.getPersistentRDDs().size() == pinned_before
+    _assert_equiv(spark, src, v1, spec1)
+    _assert_equiv(spark, src, v2, spec2)

@@ -500,3 +500,36 @@ def test_embedding_dedup_adaptive_np_cross_engine(spark, sf_dir, tmp_path):
     oracle = run_oracle(entry_mod.oracle_sql()["dedup_embedding_cosine"], str(d))
     assert len(sdf) > 0  # the jittered extras guarantee found pairs
     assert_frames_match(sdf, oracle, "dedup_embedding_cosine@600")
+
+
+def test_spread_small_sees_through_broadcast_exchanges(spark):
+    """spread_small skips only plans that hold a SHUFFLE exchange: a
+    one-partition frame cached behind a broadcast join, or filtered on
+    the literal 'Exchange', is still under-parallel and gets spread."""
+    from svdmovie_lens_parallel_apache_spark_spark.operators.relational import (
+        spread_small,
+    )
+
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    one = spark.range(0, 1000, 1, 1).withColumn("k", F.col("id") % 10)
+    dim = spark.range(10).withColumnRenamed("id", "k")
+    joined = one.join(F.broadcast(dim), "k").cache()
+    many = spark.range(0, 1000, 1, 4).withColumn("k", F.col("id") % 10)
+    shuffled = many.groupBy("k").count().cache()
+    try:
+        plan = joined._jdf.queryExecution().sparkPlan().toString()
+        assert "BroadcastExchange" in plan
+        literal = one.where(F.concat(F.lit("Exchange"), F.col("k")) != "x")
+        for df in (joined, literal):
+            assert df.rdd.getNumPartitions() == 1
+            spread = spread_small(df)
+            assert spread.rdd.getNumPartitions() == target
+            assert spread.count() == 1000
+        for df in (shuffled, one.repartition(2)):
+            assert spread_small(df) is df
+        shuffled.count()  # materialized: its plan now holds query stages
+        assert spread_small(shuffled) is shuffled
+    finally:
+        joined.unpersist()
+        shuffled.unpersist()
